@@ -3,7 +3,7 @@
 # defects (AQE plan flips, corpus-scaled bucket widths, HLL error
 # bounds) that only appear at the larger factor.
 
-.PHONY: test oracles oracles-sf01 bench scaling all
+.PHONY: test oracles oracles-sf01 bench scaling perfbench perfbench-test all
 
 test:
 	python -m pytest tests/ -x -q
@@ -19,5 +19,13 @@ bench:
 
 scaling:
 	python bench.py --scaling
+
+# tail->commit stream benchmark (BENCHMARK.json), both workloads, untraced
+perfbench:
+	python3 perfbench/run.py --workload cow_reconcile --seed 0 --seconds 15 --trace 0
+	python3 perfbench/run.py --workload mor_trickle --seed 0 --seconds 15 --trace 0
+
+perfbench-test:
+	python3 -m pytest perfbench/tests
 
 all: test oracles oracles-sf01

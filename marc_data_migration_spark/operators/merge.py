@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.normalize import normalize_text
@@ -68,6 +68,36 @@ def split_bad(changes: DataFrame) -> tuple[DataFrame, DataFrame]:
         | ~F.col("op").isin("I", "U", "D")
     )
     return changes.filter(~is_bad), changes.filter(is_bad)
+
+
+def with_fuzzy_gate(
+    df: DataFrame,
+    candidate: Column,
+    new_text: Column,
+    old_text: Column,
+    fuzzy_threshold: int,
+    require_perfect_match: bool,
+) -> tuple[DataFrame, Column]:
+    """The similarity gate of both sinks: adds ``_ratio`` (normalized
+    token_sort_ratio, null off ``candidate``) and returns the gate,
+    which passes non-candidates and candidates scoring 100
+    (``require_perfect_match``) or at least ``fuzzy_threshold``.
+
+    Catalyst extracts Python UDFs into an unconditional ArrowEvalPython
+    node, so a ``when`` around the UDF call does NOT stop it running on
+    every row (verified via executedPlan). The *inputs* are gated
+    instead: a null costs one value over Arrow and short-circuits in
+    Python, so the LCS compute only runs on genuine candidates."""
+    ratio = token_sort_ratio(
+        F.when(candidate, normalize_text(F.coalesce(new_text, F.lit("")))),
+        F.when(candidate, normalize_text(F.coalesce(old_text, F.lit("")))),
+    )
+    df = df.withColumn("_ratio", F.when(candidate, ratio))
+    if require_perfect_match:
+        ok = F.col("_ratio") == 100
+    else:
+        ok = F.col("_ratio") >= fuzzy_threshold
+    return df, ~candidate | F.coalesce(ok, F.lit(True))
 
 
 def apply_changes(
@@ -133,26 +163,10 @@ def apply_changes(
     matched_update = fresh & has_t & (F.col("c_op") != "D")
 
     if fuzzy_gate:
-        # Catalyst extracts Python UDFs into an unconditional
-        # ArrowEvalPython node — a `when(matched_update, udf(...))`
-        # wrapper does NOT stop the UDF running on every joined row
-        # (verified via executedPlan). Gate the *inputs* instead: null
-        # text for non-candidate rows costs one null per row over Arrow
-        # and short-circuits in Python, so the LCS compute only runs on
-        # genuine matched-update candidates.
-        ratio = F.when(
-            matched_update,
-            token_sort_ratio(
-                F.when(matched_update, normalize_text(F.coalesce(F.col("c_text"), F.lit("")))),
-                F.when(matched_update, normalize_text(F.coalesce(F.col("t_text"), F.lit("")))),
-            ),
+        j, gate_ok = with_fuzzy_gate(
+            j, matched_update, F.col("c_text"), F.col("t_text"),
+            fuzzy_threshold, require_perfect_match,
         )
-        j = j.withColumn("_ratio", ratio)
-        if require_perfect_match:
-            gate_ok = F.col("_ratio") == 100
-        else:
-            gate_ok = F.col("_ratio") >= fuzzy_threshold
-        gate_ok = ~matched_update | F.coalesce(gate_ok, F.lit(True))
     else:
         j = j.withColumn("_ratio", F.lit(None).cast("int"))
         gate_ok = F.lit(True)

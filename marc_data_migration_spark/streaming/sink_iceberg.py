@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import KEY_COLS
+from .sink_parquet import check_audit_mode, warn_ledger_skip
 
 
 def is_available(spark: SparkSession) -> bool:
@@ -105,10 +106,8 @@ def prepare_source(
     Returns ``(source, bad)`` — quarantined rows (null key / unknown
     op) are the caller's to persist, same contract as ParquetMergeSink.
     Runs on plain Spark (unit-testable without an Iceberg runtime)."""
-    from ..functions.normalize import normalize_text
-    from ..functions.similarity import token_sort_ratio
     from ..operators.dedup import latest_per_key
-    from ..operators.merge import split_bad
+    from ..operators.merge import split_bad, with_fuzzy_gate
 
     good, bad = split_bad(batch_df)
     latest = latest_per_key(good, method=dedup_method)
@@ -124,19 +123,11 @@ def prepare_source(
     )
     j = latest.join(t, KEY_COLS, "left_outer")
     candidate = F.col("_t_hit").isNotNull() & (F.col("op") != "D")
-    # input-gated UDF: see operators/merge.py — a `when` around the UDF
-    # call alone would still evaluate it on every row
-    ratio = token_sort_ratio(
-        F.when(candidate, normalize_text(F.coalesce(F.col("text"), F.lit("")))),
-        F.when(candidate, normalize_text(F.coalesce(F.col("_t_text"), F.lit("")))),
+    j, gate_ok = with_fuzzy_gate(
+        j, candidate, F.col("text"), F.col("_t_text"),
+        fuzzy_threshold, require_perfect_match,
     )
-    ok = ratio == 100 if require_perfect_match else ratio >= fuzzy_threshold
-    return (
-        j.withColumn("gate_ok", F.when(candidate, ok).otherwise(F.lit(True))).drop(
-            "_t_text", "_t_hit"
-        ),
-        bad,
-    )
+    return j.withColumn("gate_ok", gate_ok).drop("_t_text", "_t_hit", "_ratio"), bad
 
 
 class IcebergMergeSink:
@@ -163,21 +154,21 @@ class IcebergMergeSink:
     ) -> None:
         """run_stream-compatible contract (same kwargs ParquetMergeSink
         accepts): dedup + gate via prepare_source, MERGE under the
-        chosen strategy, quarantine + lineage appended to sibling
-        tables, batch_id replay-guarded via the lineage ledger."""
+        chosen strategy, then the lineage ledger row and, for audit
+        "full"/"fields", the quarantine rows. The ledger row precedes
+        the quarantine append, so a crash between them loses the
+        quarantine rows of that batch but a replay (skipped by the
+        ledger) can never append them twice — the parquet sinks'
+        loss-not-duplication contract."""
         from ..plans.lineage import batch_lineage
 
+        check_audit_mode(audit)
         lineage_tbl = f"{self.table}_lineage"
-        try:
-            hit = (
-                self.spark.table(lineage_tbl)
-                .filter(F.col("batch_id") == batch_id)
-                .take(1)
-            )
-            if hit:
-                return  # checkpoint replay — already applied
-        except Exception:
-            pass  # first batch: ledger table not created yet
+        if self.spark.catalog.tableExists(lineage_tbl) and (
+            self.spark.table(lineage_tbl).filter(F.col("batch_id") == batch_id).take(1)
+        ):
+            warn_ledger_skip(batch_id, self.table)
+            return
         target = self.spark.table(self.table).select(*KEY_COLS, "text")
         source, bad = prepare_source(batch_df, target, **gate_opts)
         payload_cols = [
@@ -188,10 +179,7 @@ class IcebergMergeSink:
         view = f"_changes_batch_{batch_id}"
         source.createOrReplaceTempView(view)
         self.spark.sql(merge_sql(self.table, view, payload_cols, strategy=strategy))
-        if audit == "full" and bad.take(1):
-            bad.withColumn("batch_id", F.lit(batch_id)).write.mode("append").saveAsTable(
-                f"{self.table}_quarantine"
-            )
+        n_bad = bad.count()
         # minimal ledger row (route granularity needs the join outputs
         # the SQL MERGE keeps engine-side; the parquet sink records the
         # full per-partition breakdown)
@@ -201,5 +189,9 @@ class IcebergMergeSink:
                 F.lit(0).alias("conflict"),
             ),
             batch_id,
-            n_bad=bad.count(),
+            n_bad=n_bad,
         ).write.mode("append").saveAsTable(lineage_tbl)
+        if audit in ("full", "fields") and n_bad:
+            bad.withColumn("batch_id", F.lit(batch_id)).write.mode("append").saveAsTable(
+                f"{self.table}_quarantine"
+            )

@@ -11,8 +11,8 @@ Scale design: the target table is hash-bucketed on conv_id into
 2. reads ONLY those partitions (partition pruning — the scan filter is
    on the partition column, so untouched data is never read);
 3. full-outer MERGE-applies the batch against that slice;
-4. dynamically overwrites ONLY the touched partitions
-   (``partitionOverwriteMode=dynamic``).
+4. rewrites ONLY the touched partitions: staged, then swapped in by
+   directory rename.
 
 At 100 TB with n_buckets sized so a bucket ≈ a few GB, a batch that
 touches 1% of conversations rewrites ~1% of the table — the same I/O
@@ -23,6 +23,20 @@ Schema evolution is additive: new columns appear on rewritten buckets;
 The lineage table doubles as the exactly-once ledger: a batch_id that
 already has lineage rows is a replay and is skipped outright (the
 LSN guard in the MERGE itself makes even a forced re-apply converge).
+
+Both sinks share one commit path (``ParquetMergeSink.apply_merge``);
+they differ only in what they stage and where the publish step sits
+relative to the ledger commit:
+
+- copy-on-write: stage the touched buckets → swap them into ``data/``
+  → ledger → audits;
+- merge-on-read: stage the batch's delta → ledger → audits → publish
+  the delta by rename into ``delta/``.
+
+Every write (``apply_merge``, ``compact_data``, ``compact_audit``) and
+every open first runs ``_recover()``, which brings the directory back
+to a committed state. A retry on the same sink object after a failed
+write therefore sees exactly what a restarted process would.
 """
 
 from __future__ import annotations
@@ -41,12 +55,31 @@ from ..schemas import KEY_COLS, TRANSCRIPTS_SCHEMA
 
 BUCKET_COL = "bucket"
 PROPS_FILE = "_table_properties.json"
+AUDIT_MODES = ("fields", "full", "lineage")
 
 log = logging.getLogger(__name__)
 
 
 def bucket_expr(n_buckets: int):
     return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
+
+
+def check_audit_mode(audit: str) -> None:
+    if audit not in AUDIT_MODES:
+        raise ValueError(f"unknown audit mode: {audit}")
+
+
+def warn_ledger_skip(batch_id: int, table: str) -> None:
+    """Visible marker for the commit-order trade every sink makes: if
+    the previous attempt died between the ledger commit and the audit
+    appends, this skip is where that batch's audit rows are
+    permanently lost — operators grep for it."""
+    log.warning(
+        "batch_id=%s already in ledger for %s — skipping replay "
+        "(audit rows for this batch may be absent if the prior "
+        "attempt failed between ledger commit and audit append)",
+        batch_id, table,
+    )
 
 
 def load_table_properties(path: str) -> dict | None:
@@ -87,7 +120,15 @@ def open_sink(
 
 
 class ParquetMergeSink:
+    """Copy-on-write sink. Commit protocol per batch: stage the new
+    version of the touched buckets → swap them into ``data/`` → lineage
+    append (THE ledger commit) → audits. Every step before the ledger
+    is undone or kept by ``_recover()`` so the replay converges; a crash
+    after it may lose the batch's audit rows, never doubles them."""
+
     SINK_MODE = "cow"
+    STAGING_PREFIX = "_staging_batch_"
+    STAGED_ROWS = "final"  # the MergeResult field the staging write persists
 
     def __init__(self, spark: SparkSession, path: str, n_buckets: int | None = None):
         self.spark = spark
@@ -97,10 +138,15 @@ class ParquetMergeSink:
         self.routed_path = os.path.join(path, "routed")
         self.bad_path = os.path.join(path, "bad")
         self.field_audit_path = os.path.join(path, "field_audit")
+        self.audit_paths = {
+            "lineage": self.lineage_path,
+            "routed": self.routed_path,
+            "bad": self.bad_path,
+            "field_audit": self.field_audit_path,
+        }
         self.n_buckets = self._resolve_layout(n_buckets)
         self._applied_ids: set[int] | None = None  # lazy ledger cache
-        self._recover_compaction()
-        self._recover_staging()
+        self._recover()
 
     def _resolve_layout(self, n_buckets: int | None) -> int:
         """Validate this sink against the table's persisted layout.
@@ -226,16 +272,24 @@ class ParquetMergeSink:
 
     def init(self, base: DataFrame) -> None:
         self._persist_layout()
-        # key-clustered within each bucket file: parquet row-group
-        # min/max stats on (conv_id, turn_idx) let point/range reads
-        # skip row groups — the local analogue of Iceberg's sort order
+        self._write_buckets(base, self.data_path, self.n_buckets)
+
+    def _write_buckets(self, df: DataFrame, path: str, n_parts: int) -> None:
+        """The one bucketed-layout writer (init, the staging write of
+        both sinks, compact_data). Bucket first in the sort: the
+        dynamic-partition writer requires its ordering to be prefixed by
+        the partition column, else it inserts its own bucket-only sort
+        and destroys the key clustering. Key-clustered bucket files let
+        parquet row-group min/max stats on (conv_id, turn_idx) skip row
+        groups on point/range reads — the local analogue of Iceberg's
+        sort order."""
         (
-            base.withColumn(BUCKET_COL, bucket_expr(self.n_buckets))
-            .repartition(self.n_buckets, BUCKET_COL)
+            df.withColumn(BUCKET_COL, bucket_expr(self.n_buckets))
+            .repartition(max(n_parts, 1), BUCKET_COL)
             .sortWithinPartitions(BUCKET_COL, *KEY_COLS)
             .write.mode("overwrite")
             .partitionBy(BUCKET_COL)
-            .parquet(self.data_path)
+            .parquet(path)
         )
 
     def read(self) -> DataFrame:
@@ -293,21 +347,13 @@ class ParquetMergeSink:
         guard and the north_rule metrics table). The full audit costs
         ~25% of batch wall time (BENCH/BASELINE.md component profile);
         at maximum-throughput tailing it is the first thing to shed."""
-        if audit not in ("fields", "full", "lineage"):
-            raise ValueError(f"unknown audit mode: {audit}")
+        check_audit_mode(audit)
+        self._recover()
         if batch_id in self._ledger():
-            # Visible marker for the documented commit-order trade: if
-            # the previous attempt died between the ledger commit and
-            # the audit appends, this skip is where that batch's audit
-            # rows are permanently lost — operators grep for it.
-            log.warning(
-                "batch_id=%s already in ledger for %s — skipping replay "
-                "(audit rows for this batch may be absent if the prior "
-                "attempt failed between ledger commit and audit append)",
-                batch_id, self.path,
-            )
+            warn_ledger_skip(batch_id, self.path)
             return None
         self._persist_layout()  # streams onto an un-init'd path create the table
+        self._before_batch()
         batch_df, touched = self._prepare_batch(batch_df)
         base = self._read_buckets(touched) if self.exists() else self._empty_base(batch_df)
         # persist_join: the dedup+join+gate plan is evaluated exactly once
@@ -318,36 +364,38 @@ class ParquetMergeSink:
             batch_df,
             persist_join=True,
             field_audit=(audit == "fields"),
+            emit_delta=(self.STAGED_ROWS == "delta"),
             **merge_opts,
         )
-
-        final = res.final.withColumn(BUCKET_COL, bucket_expr(self.n_buckets))
-        routed = res.routed
-        # Write the new version of the touched buckets to a staging dir,
-        # then swap partition directories into place. Writing straight
+        # Stage the batch's output invisibly to readers. Writing straight
         # over data_path would race: the merge plan reads the very files
-        # the dynamic-overwrite commit deletes. (Iceberg's snapshot
-        # commit is the atomic version of this swap — sink_iceberg.py.)
-        # The staging write also materializes the persisted join, so the
-        # post-swap reads below never touch the replaced files.
-        staging = os.path.join(self.path, f"_staging_batch_{batch_id}")
-        (
-            final.repartition(max(len(touched), 1), BUCKET_COL)
-            # bucket first: the dynamic-partition writer requires its
-            # ordering to be prefixed by the partition column, else it
-            # inserts its own bucket-only sort and destroys the key
-            # clustering; (bucket, conv, turn) satisfies both
-            .sortWithinPartitions(BUCKET_COL, *KEY_COLS)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(staging)
-        )
-        # Crash-safe swap: the old bucket is moved aside (atomic rename)
-        # rather than rmtree'd, so no crash window can lose a bucket's
-        # base rows. Recovery in _recover_staging restores any bucket
-        # still in trash with no replacement in place; the trash is
-        # deleted BEFORE the ledger write, so a post-ledger restart can
-        # never resurrect pre-merge data.
+        # a direct overwrite deletes. The staging write also materializes
+        # the persisted join, so the commit below never re-runs the merge.
+        staging = os.path.join(self.path, f"{self.STAGING_PREFIX}{batch_id}")
+        self._write_buckets(getattr(res, self.STAGED_ROWS), staging, len(touched))
+        self._commit(res, staging, batch_id, touched, audit)
+        batch_df.unpersist()
+        res.unpersist()
+        return res
+
+    def _before_batch(self) -> None:
+        """Maintenance hook run before a batch reads the table."""
+
+    def _commit(
+        self, res: MergeResult, staging: str, batch_id: int, touched: list[int], audit: str
+    ) -> None:
+        """COW: swap the staged buckets in, then the ledger and audits."""
+        self._swap_buckets(staging, batch_id, touched)
+        self._commit_lineage_and_audits(res, batch_id, audit)
+
+    def _swap_buckets(self, staging: str, batch_id: int, touched: list[int]) -> None:
+        """Crash-safe swap: the old bucket is moved aside (atomic rename)
+        rather than rmtree'd, so no crash window can lose a bucket's
+        base rows; ``_recover()`` restores any bucket still in trash with
+        no replacement in place. The trash is deleted BEFORE the ledger
+        write, so a post-ledger recovery can never resurrect pre-merge
+        data. (Iceberg's snapshot commit is the atomic version of this
+        swap — sink_iceberg.py.)"""
         os.makedirs(self.data_path, exist_ok=True)
         trash_dir = os.path.join(self.path, f"_trash_batch_{batch_id}")
         os.makedirs(trash_dir, exist_ok=True)
@@ -360,10 +408,12 @@ class ParquetMergeSink:
                 os.replace(src, dst)
         shutil.rmtree(staging, ignore_errors=True)
         shutil.rmtree(trash_dir, ignore_errors=True)
-        self._commit_lineage_and_audits(res, batch_id, audit)
-        batch_df.unpersist()
-        res.unpersist()
-        return res
+
+    def _roll_forward(self, staging: str, batch_id: int) -> None:
+        """Finish a ledgered batch whose staged dir survived. COW swaps
+        before the ledger, so such a batch is already live: only the
+        leftover is dropped."""
+        shutil.rmtree(staging, ignore_errors=True)
 
     def _prepare_batch(self, batch_df: DataFrame) -> tuple[DataFrame, list[int]]:
         """Shared pre-merge setup: key-repartition a thin micro-batch
@@ -449,7 +499,7 @@ class ParquetMergeSink:
         """Per-field old→new diff rows (audit='fields' batches only)."""
         return self.spark.read.parquet(self.field_audit_path)
 
-
+    # -- maintenance -------------------------------------------------------
     def compact_audit(self, target_files: int = 8) -> dict[str, int]:
         """Maintenance pass for the append-only side tables: each batch
         appends a few small parquet files to lineage/routed/bad, and a
@@ -459,20 +509,15 @@ class ParquetMergeSink:
         data buckets; Iceberg's rewrite_data_files is the production
         analogue). Content is unchanged — the exactly-once ledger reads
         identically afterwards. Returns files-before per table."""
+        self._recover()
         before: dict[str, int] = {}
-        for name, path in (
-            ("lineage", self.lineage_path),
-            ("routed", self.routed_path),
-            ("bad", self.bad_path),
-            ("field_audit", self.field_audit_path),
-        ):
+        for name, path in self.audit_paths.items():
             if not os.path.isdir(path):
                 continue
             files = [f for f in os.listdir(path) if f.endswith(".parquet")]
             before[name] = len(files)
             if len(files) <= target_files:
                 continue
-            staging = path + "_compacting"
             (
                 # mergeSchema: the table may mix files written before a
                 # lineage-schema addition — sampling one old footer
@@ -481,54 +526,63 @@ class ParquetMergeSink:
                 .parquet(path)
                 .coalesce(target_files)
                 .write.mode("overwrite")
-                .parquet(staging)
+                .parquet(path + "_compacting")
             )
-            trash = path + "_old"
-            shutil.rmtree(trash, ignore_errors=True)
-            os.replace(path, trash)
-            os.replace(staging, path)
-            shutil.rmtree(trash, ignore_errors=True)
+            _swap_dir(path)
         return before
 
-    def _recover_compaction(self) -> None:
-        """Crash recovery for compact_audit's two-step swap: a kill
-        between `path -> path_old` and `staging -> path` leaves the
-        table (possibly the exactly-once ledger) missing; restore the
-        original and discard the incomplete staging dir."""
-        for path in (
-            self.lineage_path,
-            self.routed_path,
-            self.bad_path,
-            self.field_audit_path,
-        ):
-            trash, staging = path + "_old", path + "_compacting"
-            if not os.path.isdir(path) and os.path.isdir(trash):
-                os.replace(trash, path)
-            shutil.rmtree(staging, ignore_errors=True)
-            shutil.rmtree(trash, ignore_errors=True)
+    # -- crash recovery --------------------------------------------------------
+    def _recover(self) -> None:
+        """Bring the table back to a committed state after a failed
+        write, in this process or a crashed one. Runs at open and before
+        every write, so a same-object retry starts from the same state a
+        restart would.
 
-    def _recover_staging(self) -> None:
-        """Crash recovery for apply_merge's bucket swap. A kill mid-swap
-        leaves some buckets moved aside into ``_trash_batch_*`` with (a)
-        their replacement already in place — keep it, the un-ledgered
-        replay converges via the LSN guard — or (b) no replacement —
-        restore the original so the replay sees the pre-merge base
-        (otherwise its non-batch rows would be permanently lost).
-        Incomplete ``_staging_batch_*`` writes are discarded; the replay
-        rewrites them."""
+        - Directory swaps (``_swap_dir``): a live dir missing next to
+          its ``<path>_old`` is restored; ``_compacting`` and ``_old``
+          leftovers are dropped.
+        - Bucket swap: a bucket in ``_trash_batch_*`` with no
+          replacement in place is restored, so the replay sees the
+          pre-merge base (otherwise its non-batch rows would be lost);
+          one with its replacement in place keeps the new data — the
+          un-ledgered replay converges via the LSN guard.
+        - Staged batches: a ledgered one is finished by
+          ``_roll_forward``; an un-ledgered one is dropped and the
+          batch replays.
+        """
+        for live in (self.data_path, *self.audit_paths.values()):
+            old = live + "_old"
+            if not os.path.isdir(live) and os.path.isdir(old):
+                os.replace(old, live)
+            shutil.rmtree(live + "_compacting", ignore_errors=True)
+            shutil.rmtree(old, ignore_errors=True)
         for name in os.listdir(self.path) if os.path.isdir(self.path) else []:
             full = os.path.join(self.path, name)
-            if name.startswith("_trash_batch_") and os.path.isdir(full):
-                os.makedirs(self.data_path, exist_ok=True)
+            if name.startswith("_trash_batch_"):
                 for entry in os.listdir(full):
-                    if not entry.startswith(f"{BUCKET_COL}="):
-                        continue
                     dst = os.path.join(self.data_path, entry)
-                    if not os.path.isdir(dst):
+                    if entry.startswith(f"{BUCKET_COL}=") and not os.path.isdir(dst):
+                        os.makedirs(self.data_path, exist_ok=True)
                         os.replace(os.path.join(full, entry), dst)
                 shutil.rmtree(full, ignore_errors=True)
-            elif name.startswith("_staging_batch_") and os.path.isdir(full):
-                shutil.rmtree(full, ignore_errors=True)
+            elif name.startswith(self.STAGING_PREFIX):
+                bid = name[len(self.STAGING_PREFIX):]
+                if bid.isdigit() and int(bid) in self._ledger():
+                    self._roll_forward(full, int(bid))
+                else:
+                    shutil.rmtree(full, ignore_errors=True)
+
+
+def _swap_dir(path: str) -> None:
+    """Replace ``path`` by its staged copy ``<path>_compacting``: move the
+    live dir aside to ``<path>_old``, rename the copy in, drop ``_old``.
+    A crash between the two renames leaves ``_old`` alone, which
+    ``_recover()`` restores."""
+    old = path + "_old"
+    if os.path.isdir(path):
+        os.replace(path, old)
+    os.replace(path + "_compacting", path)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 class MorParquetMergeSink(ParquetMergeSink):
@@ -550,13 +604,15 @@ class MorParquetMergeSink(ParquetMergeSink):
     ledger commit) → audits → atomic rename into delta/. A crash
     before the ledger replays the batch (staged dir is invisible and
     gets rewritten, no audit rows written yet → no duplicates); a
-    crash after the ledger is rolled FORWARD by init-time recovery
-    (the staged delta is complete by construction) — audit rows of
-    that batch may be lost but never doubled, the same contract as the
+    crash after the ledger is rolled FORWARD by ``_recover()`` (the
+    staged delta is complete by construction) — audit rows of that
+    batch may be lost but never doubled, the same contract as the
     copy-on-write sink.
     """
 
     SINK_MODE = "mor"
+    STAGING_PREFIX = "_delta_staging_batch_"
+    STAGED_ROWS = "delta"
 
     def __init__(
         self,
@@ -574,12 +630,11 @@ class MorParquetMergeSink(ParquetMergeSink):
         leaves compaction to an explicit compact_data() call. An
         operational knob, not a table-layout property — safe to vary
         per run. Must be >= 1."""
-        super().__init__(spark, path, n_buckets)
         if auto_compact_deltas is not None and auto_compact_deltas < 1:
             raise ValueError("auto_compact_deltas must be >= 1")
         self.auto_compact_deltas = auto_compact_deltas
         self.delta_path = os.path.join(path, "delta")
-        self._recover_mor()
+        super().__init__(spark, path, n_buckets)
 
     # -- merge-on-read view ------------------------------------------------
     def _delta_batch_dirs(self) -> list[str]:
@@ -594,17 +649,17 @@ class MorParquetMergeSink(ParquetMergeSink):
             for n in sorted(names, key=lambda n: int(n.split("=", 1)[1]))
         ]
 
-    def _has_deltas(self) -> bool:
+    def exists(self) -> bool:
         # _publish_delta never publishes an empty dir, so existence of a
         # batch dir implies parquet files — no O(total files) walk.
-        return bool(self._delta_batch_dirs())
+        return super().exists() or bool(self._delta_batch_dirs())
 
     def _mor_view(self, buckets: list[int] | None) -> DataFrame:
         """Current state = last writer per key over base ∪ deltas.
         Spark 4 plans row_number()=1 as WindowGroupLimit (partial+final)
         so the reconstruction is map-side-limited, not a full sort."""
         parts = []
-        if self.exists():
+        if super().exists():
             b = self.spark.read.option("mergeSchema", "true").parquet(self.data_path)
             if buckets is not None:
                 b = b.filter(F.col(BUCKET_COL).isin(buckets))
@@ -613,7 +668,7 @@ class MorParquetMergeSink(ParquetMergeSink):
                 .withColumn("_op", F.lit("U"))
                 .withColumn("_seq", F.lit(-1).cast("long"))
             )
-        if self._has_deltas():
+        if self._delta_batch_dirs():
             d = self.spark.read.option("mergeSchema", "true").parquet(self.delta_path)
             if buckets is not None:
                 d = d.filter(F.col(BUCKET_COL).isin(buckets))
@@ -643,31 +698,7 @@ class MorParquetMergeSink(ParquetMergeSink):
         return self._mor_view(buckets)
 
     # -- MERGE (delta write) -----------------------------------------------
-    def apply_merge(
-        self,
-        batch_df: DataFrame,
-        batch_id: int,
-        audit: str = "full",
-        **merge_opts,
-    ) -> MergeResult | None:
-        if audit not in ("fields", "full", "lineage"):
-            raise ValueError(f"unknown audit mode: {audit}")
-        if batch_id in self._ledger():
-            log.warning(
-                "batch_id=%s already in ledger for %s — skipping replay "
-                "(audit rows for this batch may be absent if the prior "
-                "attempt failed between ledger commit and audit append)",
-                batch_id, self.path,
-            )
-            # Same-object retry after a partial failure between the
-            # ledger commit and the publish rename: the staged delta is
-            # complete (the ledger is written after staging), so roll it
-            # forward here exactly like init-time recovery would.
-            staged = os.path.join(self.path, f"_delta_staging_batch_{batch_id}")
-            if os.path.isdir(staged):
-                self._publish_delta(staged, batch_id)
-            return None
-        self._persist_layout()
+    def _before_batch(self) -> None:
         # Scheduled maintenance for deltas accumulated by PREVIOUS
         # batches, run BEFORE this batch reads the view: folding here
         # both bounds the merge fan-in this batch pays and keeps the
@@ -679,39 +710,17 @@ class MorParquetMergeSink(ParquetMergeSink):
             and len(self._delta_batch_dirs()) >= self.auto_compact_deltas
         ):
             self.compact_data()
-        batch_df, touched = self._prepare_batch(batch_df)
-        if self.exists() or self._has_deltas():
-            base = self._read_buckets(touched)
-        else:
-            base = self._empty_base(batch_df)
-        res = apply_changes(
-            base,
-            batch_df,
-            persist_join=True,
-            field_audit=(audit == "fields"),
-            emit_delta=True,
-            **merge_opts,
-        )
-        # 1. stage the delta (materializes the persisted join; invisible
-        #    to readers until the final rename)
-        staging = os.path.join(self.path, f"_delta_staging_batch_{batch_id}")
-        (
-            res.delta.withColumn(BUCKET_COL, bucket_expr(self.n_buckets))
-            .repartition(max(len(touched), 1), BUCKET_COL)
-            .sortWithinPartitions(BUCKET_COL, *KEY_COLS)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(staging)
-        )
-        # 2. ledger commit, then audits (shared tail — lineage first so a
-        #    replayed batch can never duplicate audit rows), projecting
-        #    from the cache the staging write materialized
+
+    def _commit(
+        self, res: MergeResult, staging: str, batch_id: int, touched: list[int], audit: str
+    ) -> None:
+        """MoR: the ledger and audits, then publish the staged delta."""
         self._commit_lineage_and_audits(res, batch_id, audit)
-        # 3. publish: atomic rename into the live delta directory
         self._publish_delta(staging, batch_id)
-        batch_df.unpersist()
-        res.unpersist()
-        return res
+
+    def _roll_forward(self, staging: str, batch_id: int) -> None:
+        # ledgered ⇒ the staged write completed before the ledger append
+        self._publish_delta(staging, batch_id)
 
     def _publish_delta(self, staging: str, batch_id: int) -> None:
         live = os.path.join(self.delta_path, f"batch_id={batch_id}")
@@ -732,9 +741,9 @@ class MorParquetMergeSink(ParquetMergeSink):
         """Fold all published deltas into the bucketed base (Iceberg
         rewrite_data_files analogue); returns the number of delta
         batches folded. Crash-safe at every window: the staged base is
-        written from the MoR view before any swap; restoring the old
-        base (init recovery) is correct because the deltas are only
-        deleted after the new base is live. Deltas are deleted in
+        written from the MoR view before the directory swap; restoring
+        the old base (``_recover()``) is correct because the deltas are
+        only deleted after the new base is live. Deltas are deleted in
         ASCENDING batch order, so a crash mid-deletion can only leave a
         NEWEST-suffix of deltas on disk — each surviving delta row
         either ties with the folded base value (same last writer) or IS
@@ -742,54 +751,12 @@ class MorParquetMergeSink(ParquetMergeSink):
         lexicographic order — 'batch_id=10' before 'batch_id=2' — could
         leave an OLD delta alive after newer ones were removed, and its
         _seq would outrank the folded base: silent regression.)"""
+        self._recover()
         batches = self._delta_batch_dirs()  # ascending numeric order
         if not batches:
             return 0
-        staging = self.data_path + "_compacting"
-        (
-            self.read()
-            .withColumn(BUCKET_COL, bucket_expr(self.n_buckets))
-            .repartition(self.n_buckets, BUCKET_COL)
-            .sortWithinPartitions(BUCKET_COL, *KEY_COLS)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(staging)
-        )
-        trash = self.data_path + "_old"
-        shutil.rmtree(trash, ignore_errors=True)
-        if os.path.isdir(self.data_path):
-            os.replace(self.data_path, trash)
-        os.replace(staging, self.data_path)
+        self._write_buckets(self.read(), self.data_path + "_compacting", self.n_buckets)
+        _swap_dir(self.data_path)
         for b in batches:
             shutil.rmtree(b, ignore_errors=True)
-        shutil.rmtree(trash, ignore_errors=True)
         return len(batches)
-
-    # -- crash recovery --------------------------------------------------------
-    def _recover_mor(self) -> None:
-        """Roll staged deltas forward (ledgered) or back (un-ledgered),
-        and restore the base if a compact_data swap was interrupted."""
-        # base swap recovery (compact_data crashed mid-swap)
-        trash = self.data_path + "_old"
-        if not os.path.isdir(self.data_path) and os.path.isdir(trash):
-            os.replace(trash, self.data_path)
-        shutil.rmtree(self.data_path + "_compacting", ignore_errors=True)
-        shutil.rmtree(trash, ignore_errors=True)
-        # staged-delta recovery
-        if not os.path.isdir(self.path):
-            return
-        for name in os.listdir(self.path):
-            if not name.startswith("_delta_staging_batch_"):
-                continue
-            full = os.path.join(self.path, name)
-            try:
-                bid = int(name.rsplit("_", 1)[1])
-            except ValueError:
-                shutil.rmtree(full, ignore_errors=True)
-                continue
-            if bid in self._ledger():
-                # ledgered ⇒ the staged write completed; publish it
-                self._publish_delta(full, bid)
-            else:
-                # un-ledgered ⇒ the batch will replay and re-stage
-                shutil.rmtree(full, ignore_errors=True)

@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pytest
 
 from marc_data_migration_spark import feedgen, oracle
 from marc_data_migration_spark.schemas import KEY_COLS
@@ -315,13 +316,15 @@ def test_mor_schema_evolution_and_compaction(spark, tmp_path):
     assert state(sink.read()) == want_state
 
 
-def test_mor_crash_point_sweep(spark, tmp_path):
+@pytest.mark.parametrize("retry", ["reopen", "same_object"])
+def test_mor_crash_point_sweep(spark, tmp_path, retry):
     """Machine-enumerated crash windows for the MoR paths: fail the Nth
     os.replace of (a) the delta stage→ledger→publish sequence and (b)
     the compact_data base swap, for every N; after reopen (recovery)
-    plus replay/re-compaction the view must equal the uninterrupted
-    run. Covers both recovery directions — an un-ledgered staged delta
-    rolls back and replays, a ledgered one rolls forward."""
+    or on the same sink object (in-process retry), replay/re-compaction
+    must leave the view equal to the uninterrupted run. Covers both
+    recovery directions — an un-ledgered staged delta rolls back and
+    replays, a ledgered one rolls forward."""
     base_pd = feedgen.gen_transcripts(n_convs=12, seed=33)
     ch_pd = feedgen.gen_changes("upsert", n_events=120, n_convs=12, seed=33)
 
@@ -378,7 +381,7 @@ def test_mor_crash_point_sweep(spark, tmp_path):
         finally:
             os.replace = real_replace
         assert crashed, f"apply replace #{fail_at} was never reached"
-        reopened = MorParquetMergeSink(spark, sink.path, n_buckets=4)
+        reopened = MorParquetMergeSink(spark, sink.path, n_buckets=4) if retry == "reopen" else sink
         reopened.apply_merge(spark.createDataFrame(ch_pd), batch_id=0)  # None if rolled forward
         assert _final_text(reopened.read()) == want, f"apply diverged at #{fail_at}"
 
@@ -396,7 +399,10 @@ def test_mor_crash_point_sweep(spark, tmp_path):
         finally:
             os.replace = real_replace
         assert crashed, f"compact replace #{fail_at} was never reached"
-        reopened = MorParquetMergeSink(spark, sink.path, n_buckets=4)
-        assert _final_text(reopened.read()) == want, f"compact view diverged at #{fail_at}"
+        if retry == "reopen":
+            reopened = MorParquetMergeSink(spark, sink.path, n_buckets=4)
+            assert _final_text(reopened.read()) == want, f"compact view diverged at #{fail_at}"
+        else:
+            reopened = sink  # recovery runs at the start of compact_data
         reopened.compact_data()  # re-compaction after recovery also converges
         assert _final_text(reopened.read()) == want, f"re-compaction diverged at #{fail_at}"

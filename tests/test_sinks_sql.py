@@ -284,3 +284,63 @@ def test_merge_executor_honors_clause_order():
     )
     execute_merge_in_duckdb(con, sql)
     assert con.sql("SELECT * FROM tgt ORDER BY k").fetchall() == [(2, 2), (3, 300)]
+
+
+# ---------------------------------------------------------------------
+# IcebergMergeSink commit order, with the MERGE statement stubbed
+# ---------------------------------------------------------------------
+
+
+def test_iceberg_sink_ledger_precedes_quarantine(spark, monkeypatch):
+    """The ledger row is appended BEFORE the quarantine rows, so a
+    replay (skipped by the ledger) can never duplicate them; the
+    quarantine is written for audit "full" and "fields" but not
+    "lineage"; a ledgered batch is skipped without a MERGE; unknown
+    audit modes are rejected. Catalog, table reads and the MERGE
+    statement are stubbed (no Iceberg runtime here), so this pins the
+    order of the sink's own writes, not Iceberg behaviour."""
+    import types
+
+    import pytest
+    from pyspark.sql import DataFrameWriter
+
+    from marc_data_migration_spark.streaming.sink_iceberg import IcebergMergeSink
+
+    events: list[str] = []
+    monkeypatch.setattr(
+        DataFrameWriter, "saveAsTable", lambda self, name, *a, **kw: events.append(name)
+    )
+    target = spark.createDataFrame(feedgen.gen_transcripts(n_convs=4, seed=3))
+    ch_pd = feedgen.gen_changes("upsert", n_events=30, n_convs=4, seed=3)
+    ch_pd.loc[0, "op"] = "X"  # one malformed change → quarantine
+    batch = spark.createDataFrame(ch_pd)
+
+    def sink(ledgered: set[int]):
+        stub = types.SimpleNamespace(
+            catalog=types.SimpleNamespace(tableExists=lambda name: bool(ledgered)),
+            table=lambda name: (
+                spark.createDataFrame([(b,) for b in ledgered], "batch_id long")
+                if name.endswith("_lineage")
+                else target
+            ),
+            sql=lambda stmt: events.append(stmt.split()[0]),
+        )
+        s = object.__new__(IcebergMergeSink)  # __init__ needs a live catalog
+        s.spark, s.table, s.n_buckets = stub, "lake.t", 4
+        return s
+
+    for audit, want in (
+        ("full", ["MERGE", "lake.t_lineage", "lake.t_quarantine"]),
+        ("fields", ["MERGE", "lake.t_lineage", "lake.t_quarantine"]),
+        ("lineage", ["MERGE", "lake.t_lineage"]),
+    ):
+        events.clear()
+        sink(set()).apply_merge(batch, batch_id=1, audit=audit)
+        assert events == want, audit
+
+    events.clear()
+    assert sink({1}).apply_merge(batch, batch_id=1) is None
+    assert events == []
+    with pytest.raises(ValueError, match="unknown audit mode"):
+        sink(set()).apply_merge(batch, batch_id=2, audit="verbose")
+    assert events == []

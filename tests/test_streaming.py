@@ -6,6 +6,7 @@ uninterrupted run; replayed batches are no-ops (exactly-once).
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from marc_data_migration_spark import feedgen, oracle
 from marc_data_migration_spark.schemas import KEY_COLS
@@ -402,10 +403,12 @@ def test_json_feed_permissive_corrupt_quarantine(spark, tmp_path):
     assert _final_text(sink.read()) == got
 
 
-def test_crash_point_sweep_commit_swap(spark, tmp_path):
+@pytest.mark.parametrize("retry", ["reopen", "same_object"])
+def test_crash_point_sweep_commit_swap(spark, tmp_path, retry):
     """Machine-enumerated crash windows: fail the Nth os.replace of the
-    staged-swap commit for EVERY N, reopen the sink (crash recovery),
-    replay the same batch, and require convergence to the uninterrupted
+    staged-swap commit for EVERY N, then replay the same batch — after
+    reopening the sink (process restart) or on the same sink object
+    (in-process retry) — and require convergence to the uninterrupted
     run's final state — the exactly-once invariant without hand-picked
     windows (every replace precedes the ledger append, so a crashed
     batch must always replay to the identical table)."""
@@ -459,13 +462,16 @@ def test_crash_point_sweep_commit_swap(spark, tmp_path):
         finally:
             os.replace = real_replace
         assert crashed, f"replace #{fail_at} was never reached"
-        # process restart: recovery runs in __init__, then the stream
-        # replays the uncommitted batch
-        reopened = ParquetMergeSink(spark, sink.path, n_buckets=4)
-        assert not any(
-            n.startswith(("_staging_batch_", "_trash_batch_"))
-            for n in os.listdir(reopened.path)
-        )
+        if retry == "reopen":
+            # process restart: recovery runs in __init__, then the stream
+            # replays the uncommitted batch
+            reopened = ParquetMergeSink(spark, sink.path, n_buckets=4)
+            assert not any(
+                n.startswith(("_staging_batch_", "_trash_batch_"))
+                for n in os.listdir(reopened.path)
+            )
+        else:
+            reopened = sink  # recovery runs at the start of apply_merge
         assert reopened.apply_merge(spark.createDataFrame(ch_pd), batch_id=0) is not None
         assert _final_text(reopened.read()) == want, f"diverged at replace #{fail_at}"
 
